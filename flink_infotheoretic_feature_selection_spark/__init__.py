@@ -6,8 +6,8 @@ A from-scratch rebuild of the capabilities of
 
 - DataFrame/SQL for everything Catalyst can optimize (scans, filters,
   projections, group-counts, top-k, broadcast joins).
-- A cached columnar int8 block layout (``operators.transpose``) for the
-  histogram passes that power MI/CMI — one tiny shuffle per pass
+- A cached columnar uint8 block layout (``operators.packed``) for the
+  histogram passes that power MI/CMI — at most one tiny shuffle per pass
   (map-side combined contingency tables), never a data-sized shuffle.
 - A driver-side greedy loop holding per-feature criterion state
   (``functions.criteria``) — the Spark analogue of Flink bulk iteration.

@@ -28,19 +28,21 @@ over data whose layout never changes across k iterations.
 
 Scale shape (100 TB): the packed RDD is the same bytes as the DataFrame
 cache (int8/int16 columns, per-partition dict overhead amortized), it
-inherits the loop's 65536-rows-per-partition layout, and partials
-follow the same two-regime merge as ``histogram.hist3d_mi_cmi``:
-``partitions × Σxd × y_dim × z_dim × 4`` bytes under
-``BLOB_DRIVER_MERGE_MAX_BYTES`` are collected and merged on the driver
-(one stage, no shuffle); above the bound, int32 partials flow through a
-``combineByKey`` (int64 accumulators — merge order cannot change exact
-integer sums) and MI/CMI run executor-side, so the driver collects
-``n_features`` scalars.  Bit-equality of both regimes against the
-DataFrame route is pinned by tests/test_packed.py.
+inherits the loop's 65536-rows-per-partition layout, and every
+histogram pass merges its partials through ONE policy,
+``PackedMatrix._merge_tables``: ``partitions × table cells × 4`` bytes
+under ``BLOB_DRIVER_MERGE_MAX_BYTES`` are collected and merged on the
+driver (one stage, no shuffle); above the bound, int32 partials flow
+through a ``combineByKey`` (int64 accumulators — merge order cannot
+change exact integer sums) and MI/CMI run executor-side, so the driver
+collects only scalars.  Bit-equality of both regimes against the
+codegen DataFrame route (``histogram.hist2d`` / ``hist3d``) is pinned
+by tests/test_packed.py.
 """
 
 from __future__ import annotations
 
+import math
 import pickle
 from typing import Iterator
 
@@ -51,7 +53,16 @@ from flink_infotheoretic_feature_selection_spark.operators.histogram import chec
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-__all__ = ["PackedMatrix", "PackedSparse", "list_parquet_files"]
+__all__ = ["PackedMatrix", "list_parquet_files"]
+
+# Driver-side merge of histogram partials is used only below this
+# total-volume bound (exactly computable up front: partitions × table
+# cells × 4 B).  Same idea as a broadcast-join threshold: the driver
+# shortcut saves one shuffle + one Python stage when the payload is
+# small, and the distributed combineByKey merge takes over long before
+# the collect could hurt the driver.  Read at call time, so tests can
+# force the shuffled regime by patching the module attribute.
+BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
 
 
 def _is_hidden_relpath(rel: str) -> bool:
@@ -280,14 +291,53 @@ def _block_of(batches: list[pa.RecordBatch], cols: list[str]) -> dict[str, np.nd
     return arrs
 
 
+def _block_stats(blk: dict[str, np.ndarray], cols: list[str]):
+    """``(maxes, nan_mask, n_rows)`` of one block.  A NaN max from a
+    NON-empty column means it holds NULLs (Arrow promotes nullable ints
+    to float, NaN-filled; np.max propagates it) — tracked as an explicit
+    boolean mask, NEVER folded through max() (max(1.0, nan)=1.0 but
+    max(nan, 1.0)=nan: order-dependent, the r8 advisor find)."""
+    maxes = np.full(len(cols), -np.inf)
+    nan_mask = np.zeros(len(cols), dtype=bool)
+    for i, c in enumerate(cols):
+        a = blk[c]
+        if a.size:
+            m = float(a.max())
+            if math.isnan(m):
+                nan_mask[i] = True
+            else:
+                maxes[i] = m
+    return maxes, nan_mask, len(blk[cols[0]])
+
+
+def _dims_from_stats(cols: list[str], maxes, nan_mask, n: int, cap: int) -> dict[str, int]:
+    """The dims contract on merged stats: raise on empty / NULL-bearing
+    input and on over-``cap`` values, else ``{col: max+1}``."""
+    null_cols = [c for i, c in enumerate(cols) if nan_mask[i]]
+    if n == 0 or null_cols or not np.isfinite(maxes).all():
+        raise ValueError(
+            "cannot derive dims: input is empty or columns are all-NULL "
+            f"or NULL-bearing: {null_cols or cols}"
+        )
+    dims = {c: int(maxes[i]) + 1 for i, c in enumerate(cols)}
+    over = {c: d for c, d in dims.items() if d > cap}
+    if over:
+        # raise, don't clamp: clamped dims would let out-of-range
+        # values ALIAS into neighboring histogram cells downstream
+        raise ValueError(
+            f"feature values exceed the byte range (dim>{cap}): {over}"
+        )
+    return dims
+
+
 class PackedMatrix:
     """Per-partition NumPy column blocks of a wide discrete matrix,
     persisted as an RDD.
 
     Build with :meth:`pack`; release with :meth:`unpersist`.  All
     histogram methods return exact integer-merged results bit-identical
-    to the ``histogram.py`` DataFrame routes (same int64 partition
-    accumulators, same int32 partial emit, same f64 MI/CMI math).
+    to the ``histogram.py`` codegen DataFrame routes (exact int64 merges,
+    same f64 MI/CMI math).
     """
 
     #: Driver-volume bound for the one-stage stats fold AND the
@@ -530,8 +580,6 @@ class PackedMatrix:
         8k rows, local[32]: 60.9 s for the max-per-column agg vs 0.17 s
         here — NumPy ``max`` per block, scalars to the driver).
         """
-        import math
-
         cols = self.cols
 
         # Executor-side tree fold, not collect(): per-partition stat rows
@@ -540,24 +588,7 @@ class PackedMatrix:
         # 100 TB-shape 100k partitions × 632 columns.  treeReduce folds
         # them to ONE row; elementwise max and integer count sums are
         # associative/commutative, so the fold order cannot change the
-        # result.  A NaN partial from a NON-empty block means the column
-        # holds NULLs there (Arrow promotes nullable ints to float,
-        # NaN-filled; np.max propagates it) — tracked as an explicit
-        # boolean mask, NEVER folded through max() (max(1.0, nan)=1.0
-        # but max(nan, 1.0)=nan: order-dependent, the r8 advisor find).
-        def stat(blk):
-            maxes = np.full(len(cols), -np.inf)
-            nan_mask = np.zeros(len(cols), dtype=bool)
-            for i, c in enumerate(cols):
-                a = blk[c]
-                if a.size:
-                    m = float(a.max())
-                    if math.isnan(m):
-                        nan_mask[i] = True
-                    else:
-                        maxes[i] = m
-            return maxes, nan_mask, len(blk[cols[0]])
-
+        # result (NaN travels in _block_stats' mask).
         def merge(a, b):
             return np.maximum(a[0], b[0]), a[1] | b[1], a[2] + b[2]
 
@@ -576,32 +607,15 @@ class PackedMatrix:
             small = (
                 self.n_partitions * len(cols) * 16 <= self.DRIVER_STATS_MAX_BYTES
             )
-            stats = self.rdd.map(stat)
+            stats = self.rdd.map(lambda blk: _block_stats(blk, cols))
             maxes, nan_mask, n = (
                 stats.reduce(merge) if small else stats.treeReduce(merge)
             )
         except ValueError:
             # empty input packs to an RDD with no blocks; reduce of an
-            # empty RDD raises — re-raise as the dims contract error
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {cols}"
-            ) from None
-        null_cols = [c for i, c in enumerate(cols) if nan_mask[i]]
-        if n == 0 or null_cols or not np.isfinite(maxes).all():
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {null_cols or cols}"
-            )
-        dims = {c: int(maxes[i]) + 1 for i, c in enumerate(cols)}
-        over = {c: d for c, d in dims.items() if d > cap}
-        if over:
-            # raise, don't clamp: clamped dims would let out-of-range
-            # values ALIAS into neighboring histogram cells downstream
-            raise ValueError(
-                f"feature values exceed the byte range (dim>{cap}): {over}"
-            )
-        return dims, n
+            # empty RDD raises — report it as the dims contract error
+            maxes, nan_mask, n = np.full(len(cols), -np.inf), np.zeros(len(cols), bool), 0
+        return _dims_from_stats(cols, maxes, nan_mask, n, cap), n
 
     def dims_count_hist2d(
         self, y_col: str, cap: int = 256
@@ -630,12 +644,6 @@ class PackedMatrix:
         (collected stats + tables ≤ the driver-merge budget); at 100 TB
         partition counts the caller keeps the treeReduce dims pass.
         """
-        import math
-
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
         cols = self.cols
         feats = [c for c in cols if c != y_col]
         per_part_budget = max(
@@ -643,28 +651,17 @@ class PackedMatrix:
         )
 
         def stat_hist(blk):
-            maxes = np.full(len(cols), -np.inf)
-            nan_mask = np.zeros(len(cols), dtype=bool)
-            clean = True
-            for i, c in enumerate(cols):
-                a = blk[c]
-                if a.size:
-                    m = float(a.max())
-                    if math.isnan(m):
-                        nan_mask[i] = True
-                        clean = False
-                    else:
-                        maxes[i] = m
-                        # out-of-contract values (negative or >= cap)
-                        # must surface through the driver's stat checks,
-                        # never a raw bincount failure here
-                        if m >= cap or float(a.min()) < 0:
-                            clean = False
-                else:
-                    clean = False
-            nrows = len(blk[cols[0]])
+            maxes, nan_mask, nrows = _block_stats(blk, cols)
             tables = None
-            if clean and nrows:
+            # out-of-contract values (NULL, negative or >= cap) must
+            # surface through the driver's stat checks, never a raw
+            # bincount failure here
+            if (
+                nrows
+                and not nan_mask.any()
+                and (maxes < cap).all()
+                and all(float(blk[c].min()) >= 0 for c in cols)
+            ):
                 check_int32_rows(nrows)
                 y = blk[y_col].astype(np.int64)
                 y_loc = int(y.max()) + 1
@@ -691,11 +688,6 @@ class PackedMatrix:
             return maxes, nan_mask, nrows, tables
 
         parts = self.rdd.map(stat_hist).collect()
-        if not parts:
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {cols}"
-            )
         maxes = np.full(len(cols), -np.inf)
         nan_mask = np.zeros(len(cols), dtype=bool)
         n = 0
@@ -703,18 +695,7 @@ class PackedMatrix:
             maxes = np.maximum(maxes, m_)
             nan_mask |= nm_
             n += nr_
-        null_cols = [c for i, c in enumerate(cols) if nan_mask[i]]
-        if n == 0 or null_cols or not np.isfinite(maxes).all():
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {null_cols or cols}"
-            )
-        dims = {c: int(maxes[i]) + 1 for i, c in enumerate(cols)}
-        over = {c: d for c, d in dims.items() if d > cap}
-        if over:
-            raise ValueError(
-                f"feature values exceed the byte range (dim>{cap}): {over}"
-            )
+        dims = _dims_from_stats(cols, maxes, nan_mask, n, cap)
         if any(p[3] is None for p in parts):
             return dims, n, None
         y_dim = dims[y_col]
@@ -726,8 +707,9 @@ class PackedMatrix:
 
     def validate_byte_range(self, cols: list[str]) -> list[str]:
         """Columns violating the non-null-integer-in-[0,255] contract —
-        the packed twin of ``InfoThSelector._validate_byte_range`` (one
-        pass, NULLs arrive as NaN through Arrow's null→float promotion)."""
+        the byte contract of ``InfoSelector.scala:404-416``, enforced on
+        the actual [0, 255] range the histograms index by (one pass,
+        NULLs arrive as NaN through Arrow's null→float promotion)."""
         cols = list(cols)
 
         def check(blk):
@@ -802,6 +784,49 @@ class PackedMatrix:
 
     # -- histograms --------------------------------------------------------
 
+    def _merge_tables(self, block_tables, blob_bytes: int, n_keys: int, finalize) -> dict:
+        """The one merge policy of every histogram pass: ``{key:
+        finalize(key, table)}`` for the int64 sum over all blocks of the
+        int32 tables ``block_tables(blk)`` yields as ``(key, table)``.
+
+        ``blob_bytes`` is the pass's total partial volume, exactly
+        computable up front (``partitions × table cells × 4 B``).  Under
+        :data:`BLOB_DRIVER_MERGE_MAX_BYTES` the partials are collected
+        and summed on the driver, which then finalizes — one stage, no
+        shuffle.  Above it they flow through a ``combineByKey`` int64
+        merge, ``finalize`` runs executor-side and only its results reach
+        the driver.  Integer sums are order-free, so both regimes return
+        bit-identical results (pinned by tests/test_packed.py).  Keys no
+        block produced (an empty matrix has no blocks) are absent; the
+        caller supplies their zero-histogram value."""
+        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
+            totals: dict = {}
+            parts = self.rdd.mapPartitions(
+                lambda blocks: (list(block_tables(blk)) for blk in blocks)
+            ).collect()
+            for part in parts:
+                for key, table in part:
+                    if key in totals:
+                        totals[key] += table
+                    else:
+                        totals[key] = table.astype(np.int64)
+            return {key: finalize(key, table) for key, table in totals.items()}
+        # keyed path: each table is yielded as it is built, so a task
+        # never holds a whole block's tables beside the combiners
+        return dict(
+            self.rdd.mapPartitions(
+                lambda blocks: (kv for blk in blocks for kv in block_tables(blk))
+            )
+            .combineByKey(
+                lambda v: v.astype(np.int64),
+                lambda a, v: a + v,
+                lambda a, b: a + b,
+                numPartitions=min(n_keys, self.n_partitions) or 1,
+            )
+            .map(lambda kv: (kv[0], finalize(kv[0], kv[1])))
+            .collect()
+        )
+
     def relevances(
         self,
         feature_cols: list[str],
@@ -812,79 +837,35 @@ class PackedMatrix:
     ) -> dict[str, float]:
         """MI(x; y) for every feature in one pass — the packed twin of
         ``hist2d`` + ``collect_hist2d`` + ``mutual_info`` (stage 2 of the
-        fit; ``InfoTheory.scala:413-432``).
-
-        Per-feature 2-D tables are small (``xd × y_dim`` ints), but the
-        collected volume is ``n_partitions × Σxd × y_dim`` — unbounded in
-        partition count — so the same two-regime merge as
-        :meth:`hist3d_mi_cmi` applies: driver merge under
-        ``BLOB_DRIVER_MERGE_MAX_BYTES``, else int32 partials through a
-        ``combineByKey`` int64 merge with executor-side MI (the driver
-        then collects ``n_features`` scalars).  Exact in both regimes —
-        integer sums merge identically in any order."""
+        fit; ``InfoTheory.scala:413-432``).  Per-feature 2-D tables are
+        small (``xd × y_dim`` ints), but their partial volume grows with
+        the partition count, so they go through :meth:`_merge_tables`."""
         from flink_infotheoretic_feature_selection_spark.functions.infotheory import mutual_info
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
 
         feats = list(feature_cols)
         y_dim = dims[y_col]
         xd = [dims[c] for c in feats]
 
-        def partials(blocks):
-            # int32 partial emit: the collected volume then matches the
-            # blob_bytes × 4 B formula — raw int64 bincounts would put
-            # 2× the documented bound on the driver.  Overflow safety is
-            # proven once per block from its ROW COUNT (cells <= rows),
-            # not by scanning each emitted table (r9: check_int32_rows)
-            for blk in blocks:
-                y = blk[y_col].astype(np.int64)
-                check_int32_rows(len(y))
-                yield [
-                    np.bincount(
-                        blk[c].astype(np.int64) * y_dim + y,
-                        minlength=xd[fi] * y_dim,
-                    ).astype(np.int32)
-                    for fi, c in enumerate(feats)
-                ]
+        def block_tables(blk):
+            # int32 partial emit: the merged volume then matches the
+            # blob_bytes × 4 B formula.  Overflow safety is proven once
+            # per block from its ROW COUNT (cells <= rows), not by
+            # scanning each emitted table (r9: check_int32_rows)
+            y = blk[y_col].astype(np.int64)
+            check_int32_rows(len(y))
+            for fi, c in enumerate(feats):
+                yield fi, np.bincount(
+                    blk[c].astype(np.int64) * y_dim + y, minlength=xd[fi] * y_dim
+                ).astype(np.int32)
 
-        blob_bytes = self.n_partitions * sum(xd) * y_dim * 4
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = [np.zeros(d * y_dim, dtype=np.int64) for d in xd]
-            for part in self.rdd.mapPartitions(partials).collect():
-                for fi, acc in enumerate(part):
-                    totals[fi] += acc
-            return {
-                c: mutual_info(totals[fi].reshape(xd[fi], y_dim), n, emit_f32=emit_f32)
-                for fi, c in enumerate(feats)
-            }
-
-        def kv_partials(blocks):
-            for part in partials(blocks):
-                for fi, acc in enumerate(part):
-                    yield fi, acc
-
-        merged = (
-            self.rdd.mapPartitions(kv_partials)
-            .combineByKey(
-                lambda v: v.astype(np.int64),
-                lambda a, v: a + v,
-                lambda a, b: a + b,
-                numPartitions=min(len(feats), self.n_partitions),
-            )
-            .map(
-                lambda kv: (
-                    kv[0],
-                    mutual_info(kv[1].reshape(xd[kv[0]], y_dim), n, emit_f32=emit_f32),
-                )
-            )
-            .collect()
+        scores = self._merge_tables(
+            block_tables,
+            self.n_partitions * sum(xd) * y_dim * 4,
+            len(feats),
+            lambda fi, t: mutual_info(t.reshape(xd[fi], y_dim), n, emit_f32=emit_f32),
         )
-        scores = {feats[fi]: mi for fi, mi in merged}
         # empty matrix → no blocks → zero histograms, like collect_hist2d
-        for c in feats:
-            scores.setdefault(c, 0.0)
-        return scores
+        return {c: scores.get(fi, 0.0) for fi, c in enumerate(feats)}
 
     def hist3d_mi_cmi_multi(
         self,
@@ -896,24 +877,19 @@ class PackedMatrix:
         emit_f32: bool = True,
     ) -> dict[str, dict[str, tuple[float, float]]]:
         """``{y_col: {feature: (MI(x;y), CMI(x;y|z))}}`` for SEVERAL
-        conditioning columns in ONE job — the greedy loop's speculative
-        batch pass (r13, guide §1.2: the loop's sequential job count is
-        the cost, so score the known winner AND the likely next winners
-        in one launch).
+        conditioning columns in ONE job — the greedy loop's redundancy
+        pass (``InfoTheory.scala:535-586``), batched for speculation
+        (r13, guide §1.2: the loop's sequential job count is the cost,
+        so score the known winner AND the likely next winners in one
+        launch).
 
-        Each (feature, y) table is the same integer-merged contingency
-        table :meth:`hist3d_mi_cmi` builds — per-cond bincounts over the
-        same blocks, exact int64 merges in any order, the same
-        ``mi_and_cmi`` on the final table — so every returned pair is
-        bit-identical to a dedicated single-cond pass (pinned by
-        tests/test_packed.py).  The driver-merge budget accounts for ALL
-        conds together; past it the int32 partials flow through the same
-        ``combineByKey`` int64 merge keyed by (cond, feature) and only
-        scalars reach the driver."""
+        Every (cond, feature) table is an exact int64 merge of per-block
+        bincounts and gets the same ``mi_and_cmi``, so each returned pair
+        is bit-identical to the codegen ``hist3d`` + ``collect_hist3d``
+        route whatever the batch (pinned by tests/test_packed.py).  The
+        merge budget of :meth:`_merge_tables` accounts for ALL conds
+        together."""
         from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
 
         feats = list(feature_cols)
         conds = list(y_cols)
@@ -921,485 +897,29 @@ class PackedMatrix:
         y_dims = [dims[s] for s in conds]
         xd = [dims[c] for c in feats]
 
-        def partials(blocks):
-            # one pass over the blocks: per cond, the fused (y, z) code,
-            # then per feature the same int32 bincount emit as the
-            # single-cond pass (same overflow proof: counts <= rows)
-            for blk in blocks:
-                z = blk[z_col].astype(np.int64)
-                check_int32_rows(len(z))
-                out = []
-                for si, s in enumerate(conds):
-                    yz_code = blk[s].astype(np.int64) * z_dim + z
-                    yz = y_dims[si] * z_dim
-                    out.append(
-                        [
-                            np.bincount(
-                                blk[c].astype(np.int64) * yz + yz_code,
-                                minlength=xd[fi] * yz,
-                            ).astype(np.int32)
-                            for fi, c in enumerate(feats)
-                        ]
-                    )
-                yield out
-
-        blob_bytes = self.n_partitions * sum(xd) * z_dim * 4 * sum(y_dims)
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = [
-                [np.zeros(d * y_dims[si] * z_dim, dtype=np.int64) for d in xd]
-                for si in range(len(conds))
-            ]
-            for part in self.rdd.mapPartitions(partials).collect():
-                for si, cond_part in enumerate(part):
-                    for fi, acc in enumerate(cond_part):
-                        totals[si][fi] += acc
-            result = {
-                s: {
-                    feats[fi]: mi_and_cmi(
-                        totals[si][fi].reshape(xd[fi], y_dims[si], z_dim),
-                        n,
-                        emit_f32=emit_f32,
-                    )
-                    for fi in range(len(feats))
-                }
-                for si, s in enumerate(conds)
-            }
-        else:
-            # 100 TB regime: same shape as hist3d_mi_cmi's, keyed by
-            # (cond, feature); executor-side MI/CMI, scalars collected.
-            def kv_partials(blocks):
-                for part in partials(blocks):
-                    for si, cond_part in enumerate(part):
-                        for fi, acc in enumerate(cond_part):
-                            yield (si, fi), acc
-
-            merged = (
-                self.rdd.mapPartitions(kv_partials)
-                .combineByKey(
-                    lambda v: v.astype(np.int64),
-                    lambda a, v: a + v,
-                    lambda a, b: a + b,
-                    numPartitions=min(
-                        len(feats) * len(conds), self.n_partitions
-                    ),
-                )
-                .map(
-                    lambda kv: (
-                        kv[0],
-                        mi_and_cmi(
-                            kv[1].reshape(
-                                xd[kv[0][1]], y_dims[kv[0][0]], z_dim
-                            ),
-                            n,
-                            emit_f32=emit_f32,
-                        ),
-                    )
-                )
-                .collect()
-            )
-            result = {s: {} for s in conds}
-            for (si, fi), mi_cmi in merged:
-                result[conds[si]][feats[fi]] = mi_cmi
-        # empty matrix → no blocks → zero histograms, like collect_hist3d
-        for s in conds:
-            for c in feats:
-                result[s].setdefault(c, (0.0, 0.0))
-        return result
-
-    def hist3d_mi_cmi(
-        self,
-        feature_cols: list[str],
-        y_col: str,
-        z_col: str,
-        dims: dict[str, int],
-        n: int,
-        emit_f32: bool = True,
-    ) -> dict[str, tuple[float, float]]:
-        """``{feature: (MI(x;y), CMI(x;y|z))}`` — one redundancy pass of
-        the greedy loop, same contract and bit-identical output as
-        ``histogram.hist3d_mi_cmi`` (``InfoTheory.scala:535-586``)."""
-        from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
-        feats = list(feature_cols)
-        y_dim, z_dim = dims[y_col], dims[z_col]
-        yz = y_dim * z_dim
-        xd = [dims[c] for c in feats]
-
-        def partials(blocks):
-            # int32 partial emit: keeps the collected/shuffled volume
-            # equal to the blob_bytes × 4 B formula in BOTH regimes (r8
-            # review find: raw int64 bincounts put 2× the documented
-            # bound on the driver).  Overflow proof is one row-count
-            # compare per block, not a per-table scan (r9 fix)
-            for blk in blocks:
-                yz_code = blk[y_col].astype(np.int64) * z_dim + blk[z_col].astype(np.int64)
-                check_int32_rows(len(yz_code))
-                yield [
-                    np.bincount(
-                        blk[c].astype(np.int64) * yz + yz_code,
-                        minlength=xd[fi] * yz,
-                    ).astype(np.int32)
-                    for fi, c in enumerate(feats)
-                ]
-
-        blob_bytes = self.n_partitions * sum(xd) * yz * 4
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = [np.zeros(d * yz, dtype=np.int64) for d in xd]
-            for part in self.rdd.mapPartitions(partials).collect():
-                for fi, acc in enumerate(part):
-                    totals[fi] += acc
-            scores = {
-                feats[fi]: mi_and_cmi(
-                    totals[fi].reshape(xd[fi], y_dim, z_dim), n, emit_f32=emit_f32
-                )
-                for fi in range(len(feats))
-            }
-        else:
-            # 100 TB regime: int32 partial emit (histogram.py's shuffle
-            # volume), int64 combiners (exact merge in any order),
-            # executor-side MI/CMI, n_features scalars to the driver.
-            def kv_partials(blocks):
-                for part in partials(blocks):
-                    for fi, acc in enumerate(part):
-                        yield fi, acc
-
-            merged = (
-                self.rdd.mapPartitions(kv_partials)
-                .combineByKey(
-                    lambda v: v.astype(np.int64),
-                    lambda a, v: a + v,
-                    lambda a, b: a + b,
-                    numPartitions=min(len(feats), self.n_partitions),
-                )
-                .map(
-                    lambda kv: (
-                        kv[0],
-                        mi_and_cmi(
-                            kv[1].reshape(xd[kv[0]], y_dim, z_dim), n, emit_f32=emit_f32
-                        ),
-                    )
-                )
-                .collect()
-            )
-            scores = {feats[fi]: mi_cmi for fi, mi_cmi in merged}
-        # empty matrix → no blocks → zero histograms, like collect_hist3d
-        for c in feats:
-            scores.setdefault(c, (0.0, 0.0))
-        return scores
-
-
-class PackedSparse:
-    """CSC-style per-partition blocks of the label-attached nonzero
-    cells — the sparse twin of :class:`PackedMatrix`.
-
-    Input contract: a DataFrame ``(row_id, feat, x, y)`` whose
-    partitioning CO-LOCATES every cell of a row (the selector's merge
-    zipper join on ``row_id`` guarantees this — its SMJ exchange hash
-    partitions the output by ``row_id``).  Co-location is what makes the
-    per-iteration z-attach (selected feature's value per row) a purely
-    partition-local scatter, so the greedy loop runs with ZERO
-    per-iteration shuffles or joins — the SQL route
-    (``SparseInfoThSelector`` with ``loop_engine="sql"``) pays a fresh
-    plan + zipper join + sparse-cell ``toPandas`` per iteration instead.
-
-    Block layout (built once, NumPy): cells stable-sorted by ``feat``
-    with ``ptr[f]:ptr[f+1]`` slicing (the CSC column pointer), per-cell
-    ``x``/``y``/local-row arrays, local row count.  Zero-crediting stays
-    EXACTLY where the SQL route put it — on the driver against the
-    dims-bounded global ``N_y`` / ``N_zy`` tables
-    (``InfoTheory.scala:296-304``, ``:377-384``) — so histograms and
-    scores are bit-identical (pinned by tests/test_packed.py).
-    """
-
-    def __init__(self, rdd, n_features: int, n_partitions: int, total_local_rows: int = -1) -> None:
-        self.rdd = rdd
-        self.n_features = int(n_features)
-        self.n_partitions = n_partitions
-        #: Σ per-partition distinct row_id counts (set by :meth:`pack`).
-        #: Equals the GLOBAL distinct row count iff every row's cells are
-        #: co-located in one partition — the property every histogram
-        #: method here silently depends on.
-        self.total_local_rows = total_local_rows
-
-    @classmethod
-    def pack(
-        cls,
-        nzy: DataFrame,
-        n_features: int,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        expected_distinct_rows: int | None = None,
-    ) -> "PackedSparse":
-        """Pack co-located ``(row_id, feat, x, y)`` cells into CSC blocks.
-
-        ``expected_distinct_rows`` — the caller's independently-computed
-        global ``count(DISTINCT row_id)`` — arms the co-location check:
-        each block's distinct-row count rides the pack scan for free, and
-        their sum exceeds the global count exactly when some row's cells
-        were split across partitions (each split row is then counted
-        once per partition holding it).  A split would NOT fail loudly —
-        the per-iteration z-attach in :meth:`hist3d_nonzero` would
-        scatter z=0 for the cells living away from the selected feature's
-        cell and silently corrupt every score — so a mismatch raises.
-        AQE's skew-join split (``spark.sql.adaptive.skewJoin.enabled``,
-        on by default) is the known way a hash-partitioned join output
-        loses this property; ``SparseInfoThSelector`` disables it for the
-        pack job AND passes this check.
-        """
-        nf = int(n_features)
-
-        def pack_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            got = list(batches)
-            if not got:
-                return
-            cols = {
-                name: np.concatenate(
-                    [b.column(b.schema.get_field_index(name)).to_numpy(zero_copy_only=False) for b in got]
-                )
-                for name in ("row_id", "feat", "x", "y")
-            }
-            feat = cols["feat"].astype(np.int64)
-            x = cols["x"].astype(np.int64)
-            y = cols["y"].astype(np.int64)
-            if feat.size and (x.min() < 0 or y.min() < 0 or feat.min() < 0):
-                # the SQL route raises the same contract error when the
-                # collected histogram cells go negative
-                raise ValueError("sparse histogram indices must be >= 0")
-            _, inv = np.unique(cols["row_id"], return_inverse=True)
-            order = np.argsort(feat, kind="stable")
-            # Compact cell arrays: x/y are byte-ranged by contract, so
-            # _compact stores them uint8 (r10 — was int32; the persisted
-            # RDD re-deserializes every block on EVERY job, so cell
-            # bytes are the per-job floor).  Same no-silent-wrap rule as
-            # the dense blocks: out-of-range values keep a preserving
-            # dtype so the executor-side dim>256 guard in the histogram
-            # partials still sees the real value.  Local row index stays
-            # int32 (< 2^31 rows per partition by construction).
-            blk = {
-                "ptr": np.searchsorted(feat[order], np.arange(nf + 1)),
-                "x": _compact(x[order].astype(np.int32)),
-                "y": _compact(y[order].astype(np.int32)),
-                "row": inv[order].astype(np.int32),
-                "nrows": int(inv.max()) + 1 if inv.size else 0,
-            }
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([pickle.dumps(blk, protocol=pickle.HIGHEST_PROTOCOL)], type=pa.binary())],
-                names=["blk"],
-            )
-
-        rdd = (
-            nzy.select("row_id", "feat", "x", "y")
-            .mapInArrow(pack_batches, "blk binary")
-            .rdd.map(lambda r: pickle.loads(r.blk))
-            .persist(storage_level)
-        )
-        n_parts = rdd.getNumPartitions()
-        # materialize; the sum of per-partition distinct row counts rides
-        # the same job (replaces the former bare count())
-        total_local = int(rdd.map(lambda blk: blk["nrows"]).sum())
-        if expected_distinct_rows is not None and total_local != expected_distinct_rows:
-            rdd.unpersist()
-            raise ValueError(
-                "PackedSparse co-location violated: sum of per-partition "
-                f"distinct row counts {total_local} != global distinct row "
-                f"count {expected_distinct_rows}. Some row's cells are split "
-                "across partitions (e.g. AQE skew-join split of the zipper "
-                "join output); repartition the input by row_id or disable "
-                "spark.sql.adaptive.skewJoin.enabled for the pack job."
-            )
-        return cls(rdd, nf, n_parts, total_local)
-
-    def unpersist(self) -> None:
-        self.rdd.unpersist()
-
-    def dims_and_hist2d(self, y_dim: int) -> tuple[dict[int, int], dict[int, np.ndarray]]:
-        """ONE pass: per-feature dims (``max(x)+1`` over the nonzeros,
-        UNCAPPED — the caller applies the 256-contract check with its own
-        message; empty features get dim 1, mirroring the SQL route's
-        ``max(drow.get(i, 1), 1)``) AND the global ``count(x, y)``
-        nonzero tables (``(dims[f], y_dim)`` int64).
-
-        Dims ride the histogram for free: each partition bincounts codes
-        ``x·y_dim + y`` with NO minlength, so the bincount LENGTH is
-        ``local_max_code + 1`` and ``ceil(len / y_dim)`` is the local
-        ``max(x)+1``; padding partials to the running max length before
-        the exact integer merge preserves both the counts and the
-        length-encoded dims.  The caller credits the x=0 row from
-        ``N_y`` exactly like the SQL route's ``collect2d``.
-
-        Two-regime merge (r8): collected partial volume is
-        ``n_partitions × Σ local_lens × 8 B`` — unbounded in partition
-        count, the same driver-OOM class the advisor flagged on
-        ``PackedMatrix.relevances``.  The WORST-CASE volume
-        ``n_partitions × nf × 256 × y_dim × 4`` (cells are byte-ranged:
-        the executor-side guard in the partial pass raises past 256)
-        gates the route: under ``BLOB_DRIVER_MERGE_MAX_BYTES`` the
-        driver merges as before; above it int32 partials flow through a
-        per-feature ``combineByKey`` pad-to-max int64 merge and the
-        driver collects ``nf`` merged tables (dims-bounded).  Integer
-        sums and length-max are order-free, so both regimes are
-        bit-identical (pinned by tests/test_packed.py)."""
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
-        nf = self.n_features
-
-        def partials(blocks):
-            for blk in blocks:
-                ptr, x, y = blk["ptr"], blk["x"], blk["y"]
-                # Guard BEFORE sizing any bincount: the caller's dim>256
-                # contract check runs on the returned dims, but a single
-                # corrupt cell (x = 1e9, representable in the int32
-                # block) would have this partition allocate
-                # ~x·y_dim·8 bytes FIRST and OOM the executor where the
-                # SQL route's groupBy aggregated safely and the driver
-                # raised cleanly.  max(x) per feature is scalar work;
-                # raise the same contract error here instead.
-                fmax = {
-                    f: int(x[ptr[f] : ptr[f + 1]].max())
-                    for f in range(nf)
-                    if ptr[f + 1] > ptr[f]
-                }
-                over = {f: mx + 1 for f, mx in fmax.items() if mx >= 256}
-                if over:
-                    raise ValueError(
-                        f"sparse feature values exceed the byte range (dim>256): {over}"
-                    )
-                # upcast before the code product (blocks store int32);
-                # emit int32 partials so the collected volume matches the
-                # 4 B/count bound formula.  Cells count nonzero entries,
-                # bounded by the block's total nnz — one compare proves
-                # int32 safety for every feature table (r9 fix)
-                check_int32_rows(len(x))
-                yield [
-                    np.bincount(
-                        x[ptr[f] : ptr[f + 1]].astype(np.int64) * y_dim
-                        + y[ptr[f] : ptr[f + 1]]
-                    ).astype(np.int32)
-                    for f in range(nf)
-                ]
-
-        worst_case_bytes = self.n_partitions * nf * 256 * y_dim * 4
-        if worst_case_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            parts = self.rdd.mapPartitions(partials).collect()
-            dims = {
-                f: max(-(-max((len(p[f]) for p in parts), default=0) // y_dim), 1)
-                for f in range(nf)
-            }
-            totals = [np.zeros(dims[f] * y_dim, dtype=np.int64) for f in range(nf)]
-            for part in parts:
-                for f, acc in enumerate(part):
-                    totals[f][: len(acc)] += acc
-            return dims, {f: totals[f].reshape(dims[f], y_dim) for f in range(nf)}
-
-        # 100 TB regime: int32 partials, executor-side pad-to-max int64
-        # merge per feature, nf dims-bounded tables to the driver
-        def kv_partials(blocks):
-            for part in partials(blocks):
-                for f, acc in enumerate(part):
-                    yield f, acc
-
-        def pad_merge(a, v):
-            # grow the int64 accumulator to the longer partial, then add;
-            # the merged LENGTH doubles as the feature's max code + 1
-            if len(v) > len(a):
-                a = np.pad(a, (0, len(v) - len(a)))
-            a = a.astype(np.int64, copy=False)
-            a[: len(v)] += v
-            return a
-
-        merged = dict(
-            self.rdd.mapPartitions(kv_partials)
-            .combineByKey(
-                lambda v: v.astype(np.int64),
-                pad_merge,
-                pad_merge,
-                numPartitions=min(nf, self.n_partitions) or 1,
-            )
-            .collect()
-        )
-        dims = {
-            f: max(-(-len(merged.get(f, ())) // y_dim), 1) for f in range(nf)
-        }
-        out = {}
-        for f in range(nf):
-            tbl = np.zeros(dims[f] * y_dim, dtype=np.int64)
-            got = merged.get(f)
-            if got is not None:
-                tbl[: len(got)] = got
-            out[f] = tbl.reshape(dims[f], y_dim)
-        return dims, out
-
-    def hist3d_nonzero(
-        self,
-        remaining: list[int],
-        best: int,
-        dims: dict[int, int],
-        sel_dim: int,
-        y_dim: int,
-    ) -> dict[int, np.ndarray]:
-        """Global ``count(x, z=selected, y)`` over the nonzero cells of
-        every remaining feature (``(dims[f], sel_dim, y_dim)`` int64) —
-        ONE partition-local pass, no join: z comes from scattering the
-        selected feature's cells onto the partition's local row index.
-
-        Driver merge under ``BLOB_DRIVER_MERGE_MAX_BYTES`` (the loop's
-        tables are near-dense); above it, int32 partials flow through a
-        ``combineByKey`` int64 merge and only the merged per-feature
-        tables return — same two-regime shape as the dense path.
-        """
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
-        rem = list(remaining)
-        szy = sel_dim * y_dim
-
         def block_tables(blk):
-            ptr, x, y, row = blk["ptr"], blk["x"], blk["y"], blk["row"]
-            z_row = np.zeros(blk["nrows"], dtype=np.int64)
-            sl = slice(ptr[best], ptr[best + 1])
-            z_row[row[sl]] = x[sl]
-            # cells count nonzero entries <= block nnz: one compare
-            # proves int32 safety for every emitted table (r9 fix)
-            check_int32_rows(len(x))
-            for f in rem:
-                fsl = slice(ptr[f], ptr[f + 1])
-                # int64 upcast first: blocks store int32 cells; int32
-                # partial emit keeps the volume at the 4 B/count formula
-                code = x[fsl].astype(np.int64) * szy + z_row[row[fsl]] * y_dim + y[fsl]
-                yield f, np.bincount(code, minlength=dims[f] * szy).astype(np.int32)
+            # per cond the fused (y, z) code, then per feature the int32
+            # bincount emit (same overflow proof: counts <= rows)
+            z = blk[z_col].astype(np.int64)
+            check_int32_rows(len(z))
+            for si, s in enumerate(conds):
+                yz = y_dims[si] * z_dim
+                yz_code = blk[s].astype(np.int64) * z_dim + z
+                for fi, c in enumerate(feats):
+                    yield (si, fi), np.bincount(
+                        blk[c].astype(np.int64) * yz + yz_code, minlength=xd[fi] * yz
+                    ).astype(np.int32)
 
-        blob_bytes = self.n_partitions * sum(dims[f] for f in rem) * szy * 4
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = {f: np.zeros(dims[f] * szy, dtype=np.int64) for f in rem}
-
-            def partials(blocks):
-                for blk in blocks:
-                    yield list(block_tables(blk))
-
-            for part in self.rdd.mapPartitions(partials).collect():
-                for f, acc in part:
-                    totals[f] += acc
-        else:
-            def kv_partials(blocks):
-                for blk in blocks:
-                    yield from block_tables(blk)
-
-            merged = (
-                self.rdd.mapPartitions(kv_partials)
-                .combineByKey(
-                    lambda v: v.astype(np.int64),
-                    lambda a, v: a + v,
-                    lambda a, b: a + b,
-                    numPartitions=min(len(rem), self.n_partitions) or 1,
-                )
-                .collect()
-            )
-            totals = {f: np.zeros(dims[f] * szy, dtype=np.int64) for f in rem}
-            for f, arr in merged:
-                totals[f] = arr
-        return {f: totals[f].reshape(dims[f], sel_dim, y_dim) for f in rem}
+        scores = self._merge_tables(
+            block_tables,
+            self.n_partitions * sum(xd) * z_dim * 4 * sum(y_dims),
+            len(feats) * len(conds),
+            lambda k, t: mi_and_cmi(
+                t.reshape(xd[k[1]], y_dims[k[0]], z_dim), n, emit_f32=emit_f32
+            ),
+        )
+        # empty matrix → no blocks → zero histograms, like collect_hist3d
+        return {
+            s: {c: scores.get((si, fi), (0.0, 0.0)) for fi, c in enumerate(feats)}
+            for si, s in enumerate(conds)
+        }

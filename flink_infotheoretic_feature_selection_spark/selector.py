@@ -3,22 +3,19 @@
 Re-expresses the reference's flagship (``InfoSelector.scala``; lifecycle
 traced in SURVEY.md §3.1) as an idiomatic PySpark Estimator/Model:
 
-- fit stage 1: cache the wide tinyint matrix (the Spark analogue of the
-  reference's columnar transpose + HDFS persist, ``InfoSelector.scala:
-  425-437``).  Default ``loop_engine="packed"``: ONE scan of the source
-  packs per-partition NumPy column blocks into a persisted RDD
-  (operators/packed.py) — the direct analogue of the reference's
-  hand-rolled byte layout; ``loop_engine="arrow"`` keeps the
-  Tungsten-cache + per-iteration Arrow-exchange route.
+- fit stage 1: ONE scan of the source packs per-partition NumPy column
+  blocks into a persisted RDD (operators/packed.py) — the Spark analogue
+  of the reference's hand-rolled columnar transpose + HDFS persist
+  (``InfoSelector.scala:425-437``).
 - fit stage 2: per-feature dims (``counterByFeat``), 2-D histograms vs the
-  label, relevances = MI(X; class) (``InfoTheory.scala:413-432``) — from
-  the blocks (packed) or a Catalyst aggregate + codegen histogram pass
-  (arrow).
+  label, relevances = MI(X; class) (``InfoTheory.scala:413-432``) — all
+  from the packed blocks.
 - fit stage 3: MIM short-circuit = top-k by relevance
   (``InfoSelector.scala:313-315``); otherwise the greedy loop
   (``InfoSelector.scala:353-362``) runs on the driver — one Spark job per
-  selected feature (3-D histogram pass + driver MI/CMI + criterion
-  updates), the idiomatic Spark replacement for Flink bulk iteration.
+  redundancy pass (3-D histogram pass + MI/CMI + criterion updates,
+  batched speculatively), the idiomatic Spark replacement for Flink bulk
+  iteration.
 - transform: narrow column projection (``InfoSelector.scala:229-263``) —
   pure Catalyst, no shuffle.
 
@@ -51,7 +48,6 @@ Differences from the reference, deliberate and documented:
 from __future__ import annotations
 
 import math
-import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -59,19 +55,8 @@ from pyspark.storagelevel import StorageLevel
 
 from flink_infotheoretic_feature_selection_spark.functions.criteria import Criterion, criterion_factory
 from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi, mutual_info
-from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-    collect_hist2d,
-    feature_dims,
-    feature_dims_and_count,
-    hist2d,
-    hist3d_mi_cmi,
-)
 
 __all__ = ["InfoThSelector", "InfoThSelectorModel", "SparseInfoThSelector"]
-
-# Serializes the sparse pack's session-global skew-join override so two
-# concurrent fits cannot interleave set/restore (see SparseInfoThSelector.fit).
-_SKEW_CONF_LOCK = threading.Lock()
 
 
 def _tie_key(score: float, precision: int | None):
@@ -176,27 +161,20 @@ class InfoThSelector:
     users wanting byte-parity with the reference's selection order on
     near-tied scores must pass ``None``.
 
-    ``loop_engine`` — substrate for stage 2 + the greedy loop, identical
-    output (pinned by tests/test_packed.py):
+    The fit runs on the packed substrate: the matrix is packed once into
+    a persisted RDD of NumPy column blocks (operators/packed.py) and
+    each greedy pass is a plain closure over the blocks — no
+    per-iteration Catalyst plan or Arrow conversion.
 
-    - ``"packed"`` (default): pack the matrix once into a persisted RDD
-      of NumPy column blocks (operators/packed.py); each iteration is a
-      plain closure over the blocks — no per-iteration Catalyst plan or
-      Arrow conversion.  2.3× faster per iteration at sf0.1, more on
-      wide matrices.
-    - ``"arrow"``: the round-3..6 route — fresh ``mapInArrow`` plan over
-      the Tungsten cache per iteration (``histogram.hist3d_mi_cmi``).
-      Kept as the pure-DataFrame cross-check.
-
-    ``pack_route`` (packed engine only) — how the one-time pack is
-    produced; all routes yield bit-identical blocks-by-value (see
-    :meth:`_fit_packed`): ``"auto"`` (default) detects a bare local
-    parquet scan and direct-packs its files with pyarrow (no JVM row
-    transit — the r9 ``fit_parquet`` win applied automatically), else
-    takes the ``mapInArrow`` scan pack; ``"scan"`` / ``"direct"`` /
-    ``"spill"`` pin a route.  ``spill_dir`` — where the explicit spill
-    route writes its temp parquet (must be executor-visible; defaults
-    to the local temp dir, fine on single-host masters).
+    ``pack_route`` — how the one-time pack is produced; all routes yield
+    bit-identical blocks-by-value (see :meth:`_fit_packed`): ``"auto"``
+    (default) detects a bare local parquet scan and direct-packs its
+    files with pyarrow (no JVM row transit — the r9 ``fit_parquet`` win
+    applied automatically), else takes the ``mapInArrow`` scan pack;
+    ``"scan"`` / ``"direct"`` / ``"spill"`` pin a route.  ``spill_dir``
+    — where the explicit spill route writes its temp parquet (must be
+    executor-visible; defaults to the local temp dir, fine on
+    single-host masters).
     """
 
     def __init__(
@@ -209,13 +187,10 @@ class InfoThSelector:
         emit_f32: bool = True,
         validate: bool = False,
         tie_precision: int | None = 5,
-        loop_engine: str = "packed",
         pack_route: str = "auto",
         spill_dir: str | None = None,
         speculation: int | str = "auto",
     ) -> None:
-        if loop_engine not in ("packed", "arrow"):
-            raise ValueError(f"loop_engine must be 'packed' or 'arrow', got {loop_engine!r}")
         if pack_route not in ("auto", "scan", "spill", "direct"):
             raise ValueError(
                 f"pack_route must be 'auto', 'scan', 'spill' or 'direct', got {pack_route!r}"
@@ -234,7 +209,6 @@ class InfoThSelector:
         self.emit_f32 = emit_f32
         self.validate = validate
         self.tie_precision = tie_precision
-        self.loop_engine = loop_engine
         self.pack_route = pack_route
         self.spill_dir = spill_dir
         self.speculation = speculation
@@ -247,26 +221,12 @@ class InfoThSelector:
             raise ValueError(
                 f"n_to_select={self.n_to_select} exceeds n_features={len(feats)}"
             )
-        label = self.label_col
-        if self.loop_engine == "packed":
-            # The packed path scans the source EXACTLY ONCE (the pack is
-            # the cache) and derives dims/count/validation from the NumPy
-            # blocks — no DataFrame persist and no wide Catalyst
-            # aggregates, whose plan cost explodes with column count
-            # (632-column dims agg measured at 60.9 s vs 0.17 s from
-            # blocks; see operators/packed.py).
-            return self._fit_packed(df, feats, label)
-        if self.validate:
-            # label rides the same histogram index arithmetic as the
-            # features — validate it too (r8: a NULL/fractional label
-            # used to pass validation and die later in index code)
-            self._validate_byte_range(df, feats + [label])
-
-        matrix = df.select(*feats, label).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            return self._fit_cached(matrix, feats, label)
-        finally:
-            matrix.unpersist()
+        # The fit scans the source EXACTLY ONCE (the pack is the cache)
+        # and derives dims/count/validation from the NumPy blocks — no
+        # DataFrame persist and no wide Catalyst aggregates, whose plan
+        # cost explodes with column count (632-column dims agg measured
+        # at 60.9 s vs 0.17 s from blocks; see operators/packed.py).
+        return self._fit_packed(df, feats, self.label_col)
 
     def fit_parquet(self, spark, path: str, filesystem=None) -> InfoThSelectorModel:
         """Fit straight from a MATERIALIZED parquet feature matrix via
@@ -293,8 +253,6 @@ class InfoThSelector:
             list_parquet_files,
         )
 
-        if self.loop_engine != "packed":
-            raise ValueError("fit_parquet requires loop_engine='packed'")
         # list_parquet_files raises the clear 'no parquet files' error on
         # an empty directory (r10, advisor find: the old sorted(glob)[0]
         # raised a bare IndexError first) and resolves nested /
@@ -444,6 +402,14 @@ class InfoThSelector:
         import time
 
         try:
+            # ONE re-layout decision, taken before the stats pass from the
+            # pack's free row count, drives both the fusion gate and the
+            # re-layout itself.  The re-layout exists for the greedy LOOP
+            # (dims/relevances run above it); MIM and k=1 fits never run
+            # a loop pass, so re-laying out for them is pure waste (r13 —
+            # the MIM bench paid a 0.55 s coalesce for zero loop jobs).
+            needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
+            relayout = self._relayout_target(packed) if needs_loop else None
             t0 = time.perf_counter()
             if self.validate:
                 # BEFORE dims derivation: NULL-bearing columns would
@@ -464,146 +430,42 @@ class InfoThSelector:
             # by tests/test_packed.py).
             #
             # r13 (ADVICE r12, medium): do NOT fuse when the
-            # parallelism-starved re-layout below is about to fire — the
-            # fused histograms would execute serially inside the very
-            # partitions the rebalance exists to split; run the cheap
-            # stats pass, re-layout, and take the relevances pass over
-            # the spread blocks instead.  The prediction uses the pack's
-            # free n_rows (same numbers the real decision below uses).
+            # parallelism-starved split is about to fire — the fused
+            # histograms would execute serially inside the very
+            # partitions the split exists to spread; run the cheap stats
+            # pass, re-layout, and take the relevances pass over the
+            # spread blocks instead.
             h2_fused = None
-            fuse = (
+            splits = relayout is not None and relayout > packed.n_partitions
+            if not splits and (
                 packed.n_partitions * len(packed.cols) * 16
                 <= type(packed).DRIVER_STATS_MAX_BYTES
-            )
-            nr = packed.n_rows
-            if fuse and nr and nr >= 2 * self.LOOP_ROWS_PER_PARTITION:
-                sc = packed.rdd.context
-                ideal = -(-nr // self.LOOP_ROWS_PER_PARTITION)
-                target = max(1, min(ideal, sc.defaultParallelism))
-                cells = (nr * len(packed.cols)) / max(packed.n_partitions, 1)
-                if (
-                    packed.n_partitions < -(-target // 2)
-                    and cells >= self.REBALANCE_MIN_CELLS_PER_PART
-                ):
-                    fuse = False
-            if fuse:
+            ):
                 dims, n, h2_fused = packed.dims_count_hist2d(label)
             else:
                 dims, n = packed.dims_and_count()
             timings["stats_sec"] = round(time.perf_counter() - t0, 3)
-            # The re-layout exists for the greedy LOOP (dims/relevances
-            # already ran above it); MIM and k=1 fits never run a loop
-            # pass, so re-laying out for them is pure waste (r13 — the
-            # MIM bench paid a 0.55 s coalesce for zero loop jobs).
-            needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
-            if needs_loop and n >= 2 * self.LOOP_ROWS_PER_PARTITION:
-                sc = packed.rdd.context
-                # ideal = the layout the loop's memory model is built on
-                # (~LOOP_ROWS_PER_PARTITION rows per block); the
-                # core-clamped target exists ONLY for the starved case
-                # (spread few huge blocks across the cores).
-                ideal = -(-n // self.LOOP_ROWS_PER_PARTITION)
-                target = max(1, min(ideal, sc.defaultParallelism))
-                cur = packed.n_partitions
-                # Re-layout only for GROSS mismatch: parallelism-starved
-                # (cur < half the core-clamped target — e.g. one giant
-                # unsplit file) pays a one-time chunk shuffle; over-split
-                # (cur > 4× IDEAL — e.g. a 100 TB scan's millions of tiny
-                # input splits) is a shuffle-free coalesce DOWN TO IDEAL.
-                # The over-split test compares against IDEAL, never the
-                # core-clamped target: at 60M×631 the pack's 901
-                # right-sized blocks exceeded 4×32 cores and the old
-                # band coalesced them into 32 blocks of 1.9M rows /
-                # 1.2 GB each, whose concat OOM-killed the box — more
-                # partitions than cores is exactly how big data is
-                # supposed to look (r10 decade-run find).
-                #
-                # r12 (guide §2.4 — remove shuffles outright): the
-                # starved re-layout must also be WORTH its own job + a
-                # full shuffle of the packed bytes.  Spreading a
-                # partition only pays when the per-task histogram work it
-                # removes, summed over the loop's k-1 iterations, exceeds
-                # the one-time re-layout; below ~32M cells (≈32 MB of
-                # int8 blocks) per partition the per-iteration task
-                # compute is tens of ms and the shuffle can never win it
-                # back (measured sf0.1, 600k×33, local[32]: the 3→10
-                # split cost 1.3-1.8 s and the loop iteration read
-                # 0.39 s vs 0.38 s — parity).  A genuinely starved big
-                # input (one unsplit multi-GB file) is far above the
-                # threshold and still re-lays out.  Partition-count
-                # choices never affect results: histogram merges are
-                # partition-agnostic integer sums (pinned by
-                # tests/test_packed.py).
-                # r13: the over-split band tightened 4×ideal → 2×ideal.
-                # The loop's per-pass merge volume grows linearly with
-                # partition count (each partition emits one partial per
-                # (cond, feature) table), so an over-split layout pushes
-                # the pass into the shuffled combineByKey regime where
-                # the one-stage driver merge would do.  Measured sf0.1,
-                # 32 blocks vs the coalesced ideal 10: pass m=1
-                # 0.68 → 0.33 s, m=8 1.42 → 0.82 s, against a one-time
-                # shuffle-free coalesce of 0.64 s.  The coalesce target
-                # stays IDEAL (≈LOOP_ROWS_PER_PARTITION-row blocks, the
-                # loop's memory model) — never the core count, which is
-                # what OOM-killed the r10 decade run.
-                cells_per_part = (n * len(feats + [label])) / max(cur, 1)
-                if cur < -(-target // 2) and cells_per_part >= self.REBALANCE_MIN_CELLS_PER_PART:
-                    t0 = time.perf_counter()
-                    packed = packed.rebalance(target, self.LOOP_ROWS_PER_PARTITION)
-                    timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
-                elif cur > 2 * ideal:
-                    t0 = time.perf_counter()
-                    packed = packed.rebalance(ideal, self.LOOP_ROWS_PER_PARTITION)
-                    timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
+            if relayout is not None:
+                t0 = time.perf_counter()
+                packed = packed.rebalance(relayout, self.LOOP_ROWS_PER_PARTITION)
+                timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
             timings["loop_partitions"] = packed.n_partitions
-            # matrix=None: with a packed substrate _fit_stages never
-            # touches the DataFrame (both histogram passes and the
-            # partition probe run on the blocks)
-            return self._fit_stages(
-                None, feats, label, dims, n, dims[label], packed=packed,
-                timings=timings, h2_fused=h2_fused,
-            )
+            return self._fit_stages(packed, feats, label, dims, n, timings, h2_fused)
         finally:
             packed.unpersist()
 
     # -- internal ----------------------------------------------------------
 
     @staticmethod
-    def _validate_byte_range(df: DataFrame, feats: list[str]) -> None:
-        """Input validation (``InfoSelector.scala:404-416``).
+    def _byte_range_message(offenders: list[str]) -> str:
+        """Input validation error (``InfoSelector.scala:404-416``).
 
         Documented divergence: the reference's message says "[0, 255]"
         while its code accepts −128..127 and only checks the sparse path
         (SURVEY.md §1.2) — yet a negative value would crash its histogram
-        indexing just like ours.  We enforce what both engines actually
-        require — integers in [0, 255] — on every path, opt-in, as ONE
-        aggregation job (no extra pass per column).
-        """
-        from pyspark.sql import functions as F
-
-        # isNull is a separate disjunct: every other predicate evaluates
-        # to NULL for a null cell and F.sum skips NULLs, so without it a
-        # null feature passes "validation" and crashes the fit later with
-        # an unrelated indexing error.
-        bad = df.select(
-            *[
-                F.sum(
-                    (
-                        F.col(c).isNull()
-                        | (F.col(c) < 0)
-                        | (F.col(c) > 255)
-                        | (F.col(c).cast("double") % 1 != 0)
-                    ).cast("long")
-                ).alias(c)
-                for c in feats
-            ]
-        ).collect()[0]
-        offenders = [c for c in feats if (bad[c] or 0) > 0]
-        if offenders:
-            raise ValueError(InfoThSelector._byte_range_message(offenders))
-
-    @staticmethod
-    def _byte_range_message(offenders: list[str]) -> str:
+        indexing just like ours.  We enforce what the engine actually
+        requires — integers in [0, 255] — opt-in, in one pass over the
+        packed blocks (``PackedMatrix.validate_byte_range``)."""
         return (
             "features must be non-null integers in [0, 255] (the range the "
             "histogram engine indexes by; cf. InfoSelector.scala:411-414 "
@@ -630,81 +492,82 @@ class InfoThSelector:
             )
         return df
 
-    # Rows per cache partition the loop aims for, matched to the Arrow
-    # batch size it clamps (one batch per task amortizes the per-batch
-    # Python/Arrow overhead).  Matched to sf0.1 measurement: the natural
-    # parquet layout gave 3 partitions on a 32-core box — every loop
-    # pass ran 3-wide; ~64k-row partitions cut per-iteration wall time
-    # 1.05 s → 0.52 s.  Data below 2× this floor is never repartitioned
-    # (the shuffle would cost more than it saves).
+    # Rows per packed block the loop aims for.  Matched to sf0.1
+    # measurement: the natural parquet layout gave 3 partitions on a
+    # 32-core box — every loop pass ran 3-wide; ~64k-row partitions cut
+    # per-iteration wall time 1.05 s → 0.52 s.  Data below 2× this floor
+    # is never repartitioned (the shuffle would cost more than it saves).
     LOOP_ROWS_PER_PARTITION = 65536
     # Minimum per-partition cell count (rows × packed columns) for the
-    # parallelism-starved re-layout to fire — see _fit_from_packed.
+    # parallelism-starved re-layout to fire — see _relayout_target.
     # Scale-free: compares actual per-partition work against the fixed
     # cost of one extra job + shuffling every packed byte once.
     REBALANCE_MIN_CELLS_PER_PART = 32 * 1024 * 1024
 
-    def _loop_partition_target(self, matrix: DataFrame, n: int) -> int | None:
-        """Partition count the loop should run at, or None to keep the
-        input layout (small data: a shuffle would cost more than it
-        saves; near-target layouts: good enough)."""
+    def _relayout_target(self, packed) -> int | None:
+        """Partition count the greedy loop should run at, or None to keep
+        the pack's layout.  Decided from the pack's free row count (every
+        pack route records ``n_rows``; unknown → keep the layout).
+
+        ideal = the layout the loop's memory model is built on
+        (~LOOP_ROWS_PER_PARTITION rows per block); the core-clamped
+        target exists ONLY for the starved case (spread few huge blocks
+        across the cores).  Data below 2× the row floor is never
+        re-laid out (the shuffle would cost more than it saves).
+
+        Re-layout only for GROSS mismatch:
+
+        - parallelism-starved (cur < half the core-clamped target — e.g.
+          one giant unsplit file) pays a one-time chunk shuffle, and only
+          when it is WORTH its own job + a full shuffle of the packed
+          bytes (r12, guide §2.4): spreading a partition pays only when
+          the per-task histogram work it removes, summed over the loop's
+          k-1 iterations, exceeds the one-time re-layout.  Below ~32M
+          cells (≈32 MB of int8 blocks) per partition the per-iteration
+          task compute is tens of ms and the shuffle never wins it back
+          (measured sf0.1, 600k×33, local[32]: the 3→10 split cost
+          1.3-1.8 s and the loop iteration read 0.39 s vs 0.38 s).
+        - over-split (cur > 2× IDEAL — e.g. a 100 TB scan's millions of
+          tiny input splits) is a shuffle-free coalesce DOWN TO IDEAL.
+          The loop's per-pass merge volume grows linearly with partition
+          count, so an over-split layout pushes the pass into the
+          shuffled combineByKey regime where the one-stage driver merge
+          would do (r13, measured sf0.1, 32 blocks vs the coalesced
+          ideal 10: pass m=1 0.68 → 0.33 s, m=8 1.42 → 0.82 s, against a
+          0.64 s coalesce).  The test and the target compare against
+          IDEAL, never the core-clamped target: at 60M×631 the pack's
+          901 right-sized blocks exceeded 4×32 cores and an old band
+          coalesced them into 32 blocks of 1.2 GB each, whose concat
+          OOM-killed the box (r10 decade run).
+
+        Partition-count choices never affect results: histogram merges
+        are partition-agnostic integer sums (pinned by
+        tests/test_packed.py)."""
+        n = packed.n_rows or 0
         if n < 2 * self.LOOP_ROWS_PER_PARTITION:
             return None
-        sc = matrix.sparkSession.sparkContext
-        target = max(
-            1, min(-(-n // self.LOOP_ROWS_PER_PARTITION), sc.defaultParallelism)
-        )
-        cur = matrix.rdd.getNumPartitions()
-        # same gross-mismatch band as the packed engine: starved (< half
-        # the target) pays the re-layout, over-split (> 4x) coalesces
-        # shuffle-free in _fit_cached, near-target layouts are kept
-        return None if -(-target // 2) <= cur <= 4 * target else target
-
-    def _fit_cached(self, matrix: DataFrame, feats: list[str], label: str) -> InfoThSelectorModel:
-        from flink_infotheoretic_feature_selection_spark.session import conf_clamp
-
-        # one job: dims + count together (also materializes the cache)
-        dims, n = feature_dims_and_count(matrix, feats + [label])
-        y_dim = dims[label]
-        target = self._loop_partition_target(matrix, n)
-
-        with conf_clamp(
-            matrix.sparkSession,
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            "65536",
-        ):
-            repart = None
-            try:
-                if target is not None:
-                    # input-file-derived partitioning is parallelism-starved
-                    # (or over-split): re-layout ONCE, reuse k times.
-                    # Over-split consolidation is a shuffle-free coalesce
-                    # (the packed engine's band, r8) — only the starved
-                    # case pays a full repartition shuffle.
-                    cur = matrix.rdd.getNumPartitions()
-                    relayout = matrix.coalesce(target) if cur > target else matrix.repartition(target)
-                    repart = relayout.persist(StorageLevel.MEMORY_AND_DISK)
-                    matrix = repart
-                return self._fit_stages(matrix, feats, label, dims, n, y_dim)
-            finally:
-                if repart is not None:
-                    repart.unpersist()
+        ideal = -(-n // self.LOOP_ROWS_PER_PARTITION)
+        target = max(1, min(ideal, packed.rdd.context.defaultParallelism))
+        cur = packed.n_partitions
+        cells_per_part = (n * len(packed.cols)) / max(cur, 1)
+        if cur < -(-target // 2) and cells_per_part >= self.REBALANCE_MIN_CELLS_PER_PART:
+            return target
+        if cur > 2 * ideal:
+            return ideal
+        return None
 
     def _fit_stages(
         self,
-        matrix: DataFrame | None,  # None iff packed is provided
+        packed,
         feats: list[str],
         label: str,
         dims: dict[str, int],
         n: int,
-        y_dim: int,
-        packed=None,
-        timings: dict | None = None,
-        h2_fused: dict | None = None,
+        timings: dict,
+        h2_fused: dict | None,
     ) -> InfoThSelectorModel:
         import time as _time
 
-        timings = {} if timings is None else timings
         # Stage 2 — relevances: one histogram pass over all features
         # (or zero, when the fused dims+hist2d pass already produced the
         # global tables — driver-side MI math only).
@@ -714,15 +577,10 @@ class InfoThSelector:
                 c: mutual_info(h2_fused[c], n, emit_f32=self.emit_f32)
                 for c in feats
             }
-        elif packed is not None:
+        else:
             relevances = packed.relevances(
                 feats, label, dims, n, emit_f32=self.emit_f32
             )
-        else:
-            h2 = collect_hist2d(
-                hist2d(matrix, feats, label, dims, y_dim), feats, dims, y_dim
-            )
-            relevances = {c: mutual_info(h2[c], n, emit_f32=self.emit_f32) for c in feats}
         timings["relevance_sec"] = round(_time.perf_counter() - _t0, 3)
 
         state: dict[str, Criterion] = {
@@ -742,7 +600,6 @@ class InfoThSelector:
             )
             path = [(c, relevances[c]) for c in order[: self.n_to_select]]
         else:
-            n_parts = None if packed is not None else matrix.rdd.getNumPartitions()
             remaining = list(feats)
             # Speculative prefetch (r13, guide §1.2 — the greedy loop is
             # k−1 SEQUENTIAL jobs and at bench scale each pays far more
@@ -786,23 +643,16 @@ class InfoThSelector:
                 if len(path) >= self.n_to_select or not remaining:
                     break
                 # Redundancy pass: 3-D histograms of every remaining feature
-                # vs (selected=best, class) — InfoTheory.scala:445-461.
-                # Distributed dense-blob route (see hist3d_mi_cmi): one
-                # packed int32 count matrix per (feature, partition)
-                # shipped through a per-feature merge, MI/CMI computed
-                # executor-side, n_features scalar rows collected.  An
-                # Arrow plan, NOT codegen: each iteration is a fresh plan
-                # (remaining shrinks, best changes) and posexplode codegen
-                # compilation costs seconds per fresh plan.  One-shot
-                # passes (relevance init, the hist2d/hist3d gate queries)
-                # keep the codegen route.
+                # vs (selected=best, class) — InfoTheory.scala:445-461 —
+                # plus the speculated conds, merged under the packed
+                # substrate's one budget policy (PackedMatrix._merge_tables).
                 if best in prefetched:
                     # the prefetching pass scored a SUPERSET of the
                     # current remaining set (remaining only shrinks)
                     scores = prefetched.pop(best)
                     spec_hits += 1
                     consumed_since_launch += 1
-                elif packed is not None:
+                else:
                     if loop_jobs and spec_auto:
                         width = (
                             min(2 * consumed_since_launch + 1, 7)
@@ -832,20 +682,6 @@ class InfoThSelector:
                     loop_jobs += 1
                     scores = multi.pop(best)
                     prefetched.update(multi)
-                else:
-                    scores = hist3d_mi_cmi(
-                        matrix,
-                        remaining,
-                        best,
-                        label,
-                        dims,
-                        dims[best],
-                        y_dim,
-                        n,
-                        emit_f32=self.emit_f32,
-                        n_partitions=n_parts,
-                    )
-                    loop_jobs += 1
                 for c in remaining:
                     state[c].update(*scores[c])
             timings["loop_jobs"] = loop_jobs
@@ -877,30 +713,13 @@ class SparseInfoThSelector:
     semantics, ``labels`` (row_id, y).  Selection semantics are identical
     to the dense path — verified by the dense-vs-densified test.
 
-    ``loop_engine``, identical output (tests/test_packed.py):
-
-    - ``"sql"`` (default): persisted zipper layout, one co-partitioned
-      join + sparse-cell collect per iteration.  Its one-time setup is
-      cheapest (the cache materializes in Tungsten, no Python transit),
-      so it wins at small k.
-    - ``"packed"``: one zipper join attaches labels, then the cells pack
-      into row_id-co-partitioned CSC blocks
-      (operators/packed.py::PackedSparse); every iteration's z-attach is
-      a partition-local scatter — zero per-iteration joins or plans.
-      The pack pays a one-time Python/Arrow transit of the cells
-      (~6.8 s at sf0.1's 4.6M nonzeros) that 0.30 s/iteration (vs the
-      SQL route's ~0.9 s) amortizes from k ≈ 6 selected features up
-      AT THAT DATA SIZE (measured sf0.1: k=8 fit 9.0 s packed vs
-      10.9 s sql; k=3 the SQL route stays ahead).  The crossover does
-      NOT extend with data volume: at 10× (sf1-shape, 16 features /
-      ~90M cells, k=10) the cell transit outgrows the per-iteration
-      savings — 107.7 s packed vs 86.1 s sql, identical selection —
-      because the SQL route's join machinery is JVM-side and
-      data-parallel while the pack is a fixed per-byte Python toll.
-      Unlike the DENSE packed engine, whose pack REPLACES same-cost
-      Catalyst setup and wins at every k and scale, the sparse packed
-      engine is a small-data / many-iteration option; the sql default
-      is the scale path.
+    Engine: a persisted zipper layout, one co-partitioned join +
+    sparse-cell collect per iteration.  The cells stay in Tungsten (no
+    Python transit), and the join machinery is JVM-side and
+    data-parallel, which is what keeps it ahead at scale (measured at
+    sf1 shape, 16 features / ~90M cells, k=10: 86.1 s, against 107.7 s
+    for a CSC-block packing of the cells that paid a fixed per-byte
+    Python toll).
     """
 
     def __init__(
@@ -911,17 +730,13 @@ class SparseInfoThSelector:
         beta: float = 1.0,
         emit_f32: bool = True,
         tie_precision: int | None = 5,
-        loop_engine: str = "sql",
     ) -> None:
-        if loop_engine not in ("packed", "sql"):
-            raise ValueError(f"loop_engine must be 'packed' or 'sql', got {loop_engine!r}")
         self.n_features = int(n_features)
         self.n_to_select = int(n_to_select)
         self.criterion = criterion
         self.beta = beta
         self.emit_f32 = emit_f32
         self.tie_precision = tie_precision
-        self.loop_engine = loop_engine
 
     def fit(self, nonzeros: DataFrame, labels: DataFrame) -> InfoThSelectorModel:
         if self.n_to_select > self.n_features:
@@ -948,57 +763,12 @@ class SparseInfoThSelector:
         # full shuffle of the joined table here (measured: 3.8 s → 2.1 s
         # at sf0.1).  sortWithinPartitions is kept as a declarative
         # guard: it collapses to a no-op while the SMJ ordering holds.
-        packed = None
-        nzy_joined = nonzeros.join(labels.hint("merge"), "row_id").select(
-            "row_id", "feat", "x", "y"
+        nzy = (
+            nonzeros.join(labels.hint("merge"), "row_id")
+            .select("row_id", "feat", "x", "y")
+            .sortWithinPartitions("row_id")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        if self.loop_engine == "packed":
-            # The zipper join's SMJ exchange hash partitions its output by
-            # row_id (co-locating every cell of a row — what makes the
-            # per-iteration z-attach partition-local), and PackedSparse
-            # scans that output exactly once.  Two guards protect the
-            # co-location property the packed histograms silently depend
-            # on: (1) AQE's skew-join split — the one optimizer rewrite
-            # that re-scatters a hash-partitioned join output by mapper
-            # ranges — is disabled for the materializing jobs; (2) the
-            # pack verifies Σ per-partition distinct rows == global
-            # distinct rows and raises instead of silently mis-scoring.
-            # The transient persist means the join runs once for both the
-            # distinct count and the pack; it is dropped immediately
-            # after (the pack is the loop's cache).
-            from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-
-            spark = nonzeros.sparkSession
-            skew_key = "spark.sql.adaptive.skewJoin.enabled"
-            cached = nzy_joined.persist(StorageLevel.MEMORY_AND_DISK)
-            # _SKEW_CONF_LOCK serializes the set/restore window: two
-            # concurrent fits interleaving set/restore could otherwise
-            # leave the session conf wrong after both finish (r9,
-            # advisor find).  The override is still SESSION-global while
-            # held — unrelated queries running on the same session
-            # during the pack lose skew-join mitigation for that window
-            # (availability only; the pack's co-location check catches
-            # any correctness fallout).  Spark offers no per-job conf
-            # scope for AQE rewrites, so this is the best available.
-            with _SKEW_CONF_LOCK:
-                skew_prev = spark.conf.get(skew_key, "true")
-                try:
-                    spark.conf.set(skew_key, "false")
-                    distinct_rows = cached.agg(
-                        F.countDistinct("row_id").alias("d")
-                    ).collect()[0]["d"]
-                    packed = PackedSparse.pack(
-                        cached, self.n_features, expected_distinct_rows=int(distinct_rows)
-                    )
-                finally:
-                    spark.conf.set(skew_key, skew_prev)
-                    cached.unpersist()
-            nzy = None
-        else:
-            nzy = (
-                nzy_joined.sortWithinPartitions("row_id")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
         try:
             nf = self.n_features
             y_hist = {}
@@ -1024,15 +794,10 @@ class SparseInfoThSelector:
             for y_, c_ in y_hist.items():
                 n_y[y_] = c_
             # dims: per-feature max+1 (≥1 so empty features still get x=0)
-            h2nz = None
-            if packed is not None:
-                # dims ride the init histogram pass — one job for both
-                drow, h2nz = packed.dims_and_hist2d(y_dim)
-            else:
-                drow = {
-                    r["feat"]: int(r["d"])
-                    for r in nzy.groupBy("feat").agg((F.max("x") + 1).alias("d")).collect()
-                }
+            drow = {
+                r["feat"]: int(r["d"])
+                for r in nzy.groupBy("feat").agg((F.max("x") + 1).alias("d")).collect()
+            }
             # Same 256 cap as the dense path's feature_dims: without it a
             # single corrupt cell (x = 1e6) would size every per-feature
             # ndarray by it — hundreds of GB of driver allocations
@@ -1067,20 +832,9 @@ class SparseInfoThSelector:
                         )
                 return out
 
-            if packed is not None:
-                h2 = h2nz
-                # credited zeros: count(x=0, y) = N_y − Σ_{x≠0} count(x, y)
-                for i in range(nf):
-                    h2[i][0] = n_y - h2[i][1:].sum(axis=0)
-                    if (h2[i][0] < 0).any():
-                        raise ValueError(
-                            "nonzero counts exceed label totals for "
-                            f"feature {i}: duplicate (row_id, feat) cells"
-                        )
-            else:
-                h2 = collect2d(
-                    nzy.groupBy("feat", "x", "y").agg(F.count("*").alias("cnt"))
-                )
+            h2 = collect2d(
+                nzy.groupBy("feat", "x", "y").agg(F.count("*").alias("cnt"))
+            )
             relevances = {
                 i: mutual_info(h2[i], n, emit_f32=self.emit_f32) for i in range(nf)
             }
@@ -1117,19 +871,6 @@ class SparseInfoThSelector:
                     # iteration; an interim version kept a transposed
                     # copy only to transpose it back at the use site.
                     n_zy = h2[best]
-
-                    if packed is not None:
-                        # partition-local z-attach + bincount, zero joins
-                        h3 = packed.hist3d_nonzero(
-                            remaining, best, dims, sel_dim, y_dim
-                        )
-                        for i in remaining:
-                            out_i = h3[i]
-                            # credited zeros: count(x=0, z, y) = N_zy − Σ_{x≠0}
-                            out_i[0] = n_zy - out_i[1:].sum(axis=0)
-                            mi, cmi = mi_and_cmi(out_i, n, emit_f32=self.emit_f32)
-                            state[i].update(mi, cmi)
-                        continue
 
                     # z column = selected feature's nonzeros (absent ⇒ z=0);
                     # same row_id partitioning as nzy, so the join below is
@@ -1176,7 +917,4 @@ class SparseInfoThSelector:
                 relevances={names[i]: relevances[i] for i in range(nf)},
             )
         finally:
-            if packed is not None:
-                packed.unpersist()
-            if nzy is not None:
-                nzy.unpersist()
+            nzy.unpersist()

@@ -1,28 +1,31 @@
 """PackedMatrix (operators/packed.py) — bit-equality against the
-DataFrame histogram routes, both merge regimes, and fit parity between
-``loop_engine="packed"`` and ``loop_engine="arrow"``.
+codegen DataFrame histogram routes in both merge regimes, layout
+decisions, and selection invariance across them.
 
-The packed substrate replaces the per-iteration mapInArrow pass of the
-greedy loop; these tests pin that the replacement changes NOTHING about
-the numbers — same int64 partition accumulators, same exact integer
-merges, same MI/CMI floats, same selection paths.
+The packed substrate is the selector's one engine; these tests pin that
+it changes NOTHING about the numbers — exact integer merges, the same
+MI/CMI floats as the codegen route, the same selection paths whatever
+the layout, merge regime or speculation width.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from pyspark import RDD
+
 from flink_infotheoretic_feature_selection_spark import InfoThSelector
 from flink_infotheoretic_feature_selection_spark.datasets import features_dense
-from flink_infotheoretic_feature_selection_spark.operators import histogram
+from flink_infotheoretic_feature_selection_spark.operators import packed as packed_mod
 from flink_infotheoretic_feature_selection_spark.operators.histogram import (
     collect_hist2d,
+    collect_hist3d,
     feature_dims_and_count,
     hist2d,
-    hist3d_mi_cmi,
+    hist3d,
 )
 from flink_infotheoretic_feature_selection_spark.operators.packed import PackedMatrix
-from flink_infotheoretic_feature_selection_spark.functions.infotheory import mutual_info
+from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi, mutual_info
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,44 +51,45 @@ def _dims_n(matrix):
     return feature_dims_and_count(matrix, cols)
 
 
-def test_relevances_bit_equal_hist2d_route(matrix, packed):
+@pytest.mark.parametrize("regime", ["driver", "shuffled"])
+@pytest.mark.parametrize("method", ["relevances", "hist3d_mi_cmi_multi"])
+def test_packed_pass_bit_equal_codegen_reference(matrix, packed, method, regime, monkeypatch):
+    """Both packed histogram passes return exactly the floats of the
+    codegen hist2d/hist3d + collect_hist2d/collect_hist3d +
+    mutual_info/mi_and_cmi route, in both regimes of the one merge
+    helper (a zero budget forces the shuffled combineByKey merge)."""
     feats = [c for c in matrix.columns if c != "label"]
     dims, n = _dims_n(matrix)
     y_dim = dims["label"]
-    h2 = collect_hist2d(hist2d(matrix, feats, "label", dims, y_dim), feats, dims, y_dim)
-    want = {c: mutual_info(h2[c], n, emit_f32=True) for c in feats}
-    got = packed.relevances(feats, "label", dims, n, emit_f32=True)
+    if method == "relevances":
+        h2 = collect_hist2d(hist2d(matrix, feats, "label", dims, y_dim), feats, dims, y_dim)
+        want = {c: mutual_info(h2[c], n, emit_f32=True) for c in feats}
+        args = (feats, "label", dims, n)
+    else:
+        conds = [feats[3], feats[0], feats[5]]
+        remaining = [c for c in feats if c != feats[3]]
+        want = {}
+        for s in conds:
+            h3 = collect_hist3d(
+                hist3d(matrix, remaining, s, "label", dims, dims[s], y_dim),
+                remaining, dims, dims[s], y_dim,
+            )
+            want[s] = {c: mi_and_cmi(h3[c], n, emit_f32=True) for c in remaining}
+        args = (remaining, conds, "label", dims, n)
+
+    shuffles = []
+    combine = RDD.combineByKey
+
+    def counting_combine(self, *a, **k):
+        shuffles.append(1)
+        return combine(self, *a, **k)
+
+    monkeypatch.setattr(RDD, "combineByKey", counting_combine)
+    if regime == "shuffled":
+        monkeypatch.setattr(packed_mod, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
+    got = getattr(packed, method)(*args, emit_f32=True)
+    assert len(shuffles) == (regime == "shuffled")
     assert got == want  # exact float equality, not approx
-
-
-@pytest.mark.parametrize("forced_regime", ["driver", "distributed"])
-def test_hist3d_mi_cmi_bit_equal_both_regimes(matrix, packed, forced_regime, monkeypatch):
-    feats = [c for c in matrix.columns if c != "label"]
-    dims, n = _dims_n(matrix)
-    best, remaining = feats[3], [c for c in feats if c != feats[3]]
-    if forced_regime == "distributed":
-        # force the combineByKey/executor-side-MI path on tiny data
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-    want = hist3d_mi_cmi(
-        matrix, remaining, best, "label", dims, dims[best], dims["label"], n,
-        emit_f32=True,
-    )
-    got = packed.hist3d_mi_cmi(remaining, best, "label", dims, n, emit_f32=True)
-    assert got == want  # exact float equality in BOTH regimes
-
-
-@pytest.mark.parametrize("criterion", ["mrmr", "cmim", "mim"])
-def test_fit_identical_packed_vs_arrow(matrix, criterion):
-    a = InfoThSelector(n_to_select=6, criterion=criterion, loop_engine="arrow").fit(matrix)
-    p = InfoThSelector(n_to_select=6, criterion=criterion, loop_engine="packed").fit(matrix)
-    assert p.selection_path == a.selection_path
-    assert p.relevances == a.relevances
-    assert p.selected_cols == a.selected_cols
-
-
-def test_loop_engine_validated():
-    with pytest.raises(ValueError, match="loop_engine"):
-        InfoThSelector(loop_engine="flink")
 
 
 def test_dims_and_count_matches_catalyst_route(matrix, packed):
@@ -117,68 +121,16 @@ def test_rebalance_preserves_histograms(matrix, packed):
     feats = [c for c in matrix.columns if c != "label"]
     dims, n = _dims_n(matrix)
     best, remaining = feats[0], feats[1:6]
-    want = packed.hist3d_mi_cmi(remaining, best, "label", dims, n)
+    want = packed.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n)
     pm2 = PackedMatrix.pack(matrix, feats + ["label"], n_partitions=2)
     try:
         pm3 = pm2.rebalance(6, rows_per_partition=max(1, n // 6))
         assert pm3.n_partitions >= 2  # actually re-laid-out
         assert pm3.dims_and_count() == (dims, n)
-        assert pm3.hist3d_mi_cmi(remaining, best, "label", dims, n) == want
+        assert pm3.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n) == want
         pm3.unpersist()
     finally:
         pm2.unpersist()
-
-
-@pytest.mark.parametrize("criterion", ["mrmr", "cmim"])
-def test_sparse_fit_identical_packed_vs_sql(matrix, criterion):
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    feats = [c for c in matrix.columns if c != "label"][:8]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        a = SparseInfoThSelector(
-            n_features=8, n_to_select=4, criterion=criterion, loop_engine="sql"
-        ).fit(nz, labels)
-        p = SparseInfoThSelector(
-            n_features=8, n_to_select=4, criterion=criterion, loop_engine="packed"
-        ).fit(nz, labels)
-        assert p.selection_path == a.selection_path
-        assert p.relevances == a.relevances
-    finally:
-        base.unpersist()
-
-
-def test_sparse_packed_distributed_merge_regime(matrix, monkeypatch):
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    feats = [c for c in matrix.columns if c != "label"][:8]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        want = SparseInfoThSelector(
-            n_features=8, n_to_select=4, loop_engine="sql"
-        ).fit(nz, labels)
-        # force every per-iteration merge through combineByKey
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-        got = SparseInfoThSelector(
-            n_features=8, n_to_select=4, loop_engine="packed"
-        ).fit(nz, labels)
-        assert got.selection_path == want.selection_path
-        assert got.relevances == want.relevances
-    finally:
-        base.unpersist()
-
-
-def test_sparse_packed_rejects_negative_indices(spark):
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    nz = spark.createDataFrame([(0, 1, -2)], "row_id long, feat int, x int")
-    labels = spark.createDataFrame([(0, 1)], "row_id long, y int")
-    with pytest.raises(Exception, match=">= 0|negative"):
-        SparseInfoThSelector(n_features=2, n_to_select=1, loop_engine="packed").fit(
-            nz, labels
-        )
 
 
 def test_pack_keeps_layout_when_target_none(matrix):
@@ -191,20 +143,6 @@ def test_pack_keeps_layout_when_target_none(matrix):
         assert list(blocks[0].keys()) == feats + ["label"]
     finally:
         pm.unpersist()
-
-
-def test_relevances_bit_equal_distributed_regime(matrix, packed, monkeypatch):
-    # r8 advisor fix: relevances used to collect un-merged per-partition
-    # partials unconditionally (n_partitions × Σxd × y_dim driver bytes,
-    # unbounded in partition count); it now shares hist3d_mi_cmi's
-    # two-regime merge. Forcing the combineByKey regime must change
-    # NOTHING about the floats.
-    feats = [c for c in matrix.columns if c != "label"]
-    dims, n = _dims_n(matrix)
-    want = packed.relevances(feats, "label", dims, n, emit_f32=True)
-    monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-    got = packed.relevances(feats, "label", dims, n, emit_f32=True)
-    assert got == want
 
 
 def test_dims_and_count_raises_on_partial_nulls(spark):
@@ -225,74 +163,6 @@ def test_dims_and_count_raises_on_partial_nulls(spark):
             pm.dims_and_count()
     finally:
         pm.unpersist()
-
-
-def test_sparse_packed_oversized_dim_errors_before_alloc(spark):
-    # r8 advisor fix: a corrupt cell (x=1e6, int32-representable) used to
-    # size the executor-side bincount BEFORE the caller's dim>256 check —
-    # ~x·y_dim·8 bytes per partition. The guard now raises the same
-    # contract error from the scalar per-feature max, allocating nothing.
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    labels = spark.createDataFrame([(r, r % 2) for r in range(4)], "row_id long, y int")
-    huge = spark.createDataFrame(
-        [(0, 0, 1_000_000), (1, 1, 2), (2, 0, 1)], "row_id long, feat int, x int"
-    )
-    with pytest.raises(Exception, match="dim>256"):
-        SparseInfoThSelector(n_features=2, n_to_select=1, loop_engine="packed").fit(
-            huge, labels
-        )
-
-
-def test_sparse_pack_colocation_check(spark, matrix):
-    # The packed histograms silently depend on every row's cells landing
-    # in ONE partition. pack(expected_distinct_rows=...) must catch a
-    # split layout (here: partitioned by feat, so each row spans
-    # partitions) and pass a co-located one.
-    from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-
-    feats = [c for c in matrix.columns if c != "label"][:4]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        nzy = nz.join(labels, "row_id").select("row_id", "feat", "x", "y")
-        n_distinct = nzy.select("row_id").distinct().count()
-
-        split = nzy.repartition(4, "feat")
-        with pytest.raises(ValueError, match="co-location"):
-            PackedSparse.pack(split, 4, expected_distinct_rows=n_distinct)
-
-        ok = nzy.repartition(4, "row_id")
-        ps = PackedSparse.pack(ok, 4, expected_distinct_rows=n_distinct)
-        assert ps.total_local_rows == n_distinct
-        ps.unpersist()
-    finally:
-        base.unpersist()
-
-
-def test_sparse_dims_and_hist2d_bit_equal_both_regimes(matrix, monkeypatch):
-    # r8: the init histogram pass gained the same two-regime merge as the
-    # loop (collected partials were unbounded in partition count).
-    # Forcing the combineByKey pad-to-max route must change nothing.
-    from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-
-    feats = [c for c in matrix.columns if c != "label"][:6]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        nzy = nz.join(labels, "row_id").select("row_id", "feat", "x", "y")
-        ps = PackedSparse.pack(nzy.repartition(4, "row_id"), 6)
-        y_dim = int(labels.agg({"y": "max"}).collect()[0][0]) + 1
-        dims_a, h2_a = ps.dims_and_hist2d(y_dim)
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-        dims_b, h2_b = ps.dims_and_hist2d(y_dim)
-        assert dims_a == dims_b
-        assert set(h2_a) == set(h2_b)
-        for f in h2_a:
-            assert (h2_a[f] == h2_b[f]).all(), f
-        ps.unpersist()
-    finally:
-        base.unpersist()
 
 
 def test_pack_rejects_duplicate_column_names(spark):
@@ -356,8 +226,7 @@ def test_dims_count_hist2d_budget_fallback_and_errors(spark, matrix, packed, mon
     # shrinking the driver-merge budget makes every block decline to
     # histogram -> h2 None, dims/count still exact (the caller's
     # fallback contract)
-    import flink_infotheoretic_feature_selection_spark.operators.packed as packed_mod
-    monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
+    monkeypatch.setattr(packed_mod, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
     dims, n = packed.dims_and_count()
     fdims, fn, h2 = packed.dims_count_hist2d("label")
     assert (fdims, fn, h2) == (dims, n, None)
@@ -375,24 +244,6 @@ def test_dims_count_hist2d_budget_fallback_and_errors(spark, matrix, packed, mon
             pm.dims_count_hist2d("label")
     finally:
         pm.unpersist()
-
-
-@pytest.mark.parametrize("forced_regime", ["driver", "distributed"])
-def test_hist3d_mi_cmi_multi_bit_equal_single(matrix, packed, forced_regime, monkeypatch):
-    """r13: the speculative batch pass returns, for every conditioning
-    column, exactly the pairs a dedicated single-cond pass returns —
-    in BOTH merge regimes."""
-    feats = [c for c in matrix.columns if c != "label"]
-    dims, n = _dims_n(matrix)
-    conds = [feats[3], feats[0], feats[5]]
-    if forced_regime == "distributed":
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-    remaining = [c for c in feats if c != feats[3]]
-    got = packed.hist3d_mi_cmi_multi(remaining, conds, "label", dims, n, emit_f32=True)
-    assert sorted(got) == sorted(conds)
-    for s in conds:
-        want = packed.hist3d_mi_cmi(remaining, s, "label", dims, n, emit_f32=True)
-        assert got[s] == want  # exact float equality
 
 
 @pytest.mark.parametrize("criterion", ["mrmr", "jmi", "cmim", "icap", "mifs"])
@@ -445,6 +296,40 @@ def test_fusion_skipped_when_rebalance_will_fire(spark, matrix, monkeypatch):
     assert "rebalance_sec" in m.fit_timings
     assert m.selection_path == m_fused.selection_path
     assert m.relevances == m_fused.relevances
+
+
+def test_starved_mim_fit_keeps_fused_stats_pass(spark, matrix, monkeypatch):
+    """ADVICE r13 (medium): the re-layout is decided once, from the
+    pack's row count AND whether a loop runs.  A MIM fit never
+    re-lays out, so a starved input must still take the fused
+    dims+hist2d pass and run no separate relevances pass — with the same
+    selection as the unshrunk fit."""
+    from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
+
+    few = matrix.coalesce(1)
+    want = Sel(n_to_select=3, criterion="mim").fit(few)
+
+    # the same shrunk constants that make the mrmr fit re-lay out
+    monkeypatch.setattr(Sel, "REBALANCE_MIN_CELLS_PER_PART", 0)
+    monkeypatch.setattr(Sel, "LOOP_ROWS_PER_PARTITION", 64)
+    fused_calls = []
+    fused = PackedMatrix.dims_count_hist2d
+
+    def counting_fused(self, *a, **k):
+        fused_calls.append(1)
+        return fused(self, *a, **k)
+
+    def boom(self, *a, **k):  # pragma: no cover - failure path
+        raise AssertionError("a starved MIM fit must not run a relevances pass")
+
+    monkeypatch.setattr(PackedMatrix, "dims_count_hist2d", counting_fused)
+    monkeypatch.setattr(PackedMatrix, "relevances", boom)
+    m = Sel(n_to_select=3, criterion="mim").fit(few)
+    assert fused_calls == [1]
+    assert "rebalance_sec" not in m.fit_timings
+    assert m.fit_timings["loop_partitions"] == 1
+    assert m.selection_path == want.selection_path
+    assert m.relevances == want.relevances
 
 
 def test_pack_records_n_rows(matrix, packed):

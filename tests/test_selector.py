@@ -242,17 +242,6 @@ def test_feature_dims_raises_instead_of_clamping(spark):
         feature_dims_and_count(df, ["f0", "label"])
 
 
-def test_int32_exact_guards_partial_overflow():
-    import numpy as np
-    import pytest
-    from flink_infotheoretic_feature_selection_spark.operators.histogram import int32_exact
-
-    ok = np.array([0, 2**31 - 1], dtype=np.int64)
-    assert int32_exact(ok).dtype == np.int32
-    with pytest.raises(ValueError, match="int32"):
-        int32_exact(np.array([2**31], dtype=np.int64))
-
-
 def test_check_int32_rows_proof():
     # r9: the hot-path guard is an O(1) row-count proof — a bincount
     # cell can never exceed the number of rows counted, so n_rows at
@@ -291,12 +280,10 @@ def test_validate_rejects_null_label(spark):
     df = spark.createDataFrame(
         [(1, 0, 0), (2, 1, None), (2, 0, 1)], "f0 int, f1 int, label int"
     )
-    for engine in ("packed", "arrow"):
-        with pytest.raises(ValueError, match="non-null integers"):
-            InfoThSelector(
-                n_to_select=1, feature_cols=["f0", "f1"], validate=True,
-                loop_engine=engine,
-            ).fit(df)
+    with pytest.raises(ValueError, match="non-null integers"):
+        InfoThSelector(
+            n_to_select=1, feature_cols=["f0", "f1"], validate=True
+        ).fit(df)
 
 
 def test_sparse_fit_clear_errors_on_bad_labels(spark):
@@ -331,11 +318,8 @@ def test_sparse_fit_rejects_duplicate_cells(spark):
     dup = spark.createDataFrame(
         [(0, 0, 2)] * 3 + [(1, 1, 1)], "row_id long, feat int, x int"
     )
-    for engine in ("sql", "packed"):
-        with pytest.raises(ValueError, match="duplicate"):
-            SparseInfoThSelector(
-                n_features=2, n_to_select=1, loop_engine=engine
-            ).fit(dup, labels)
+    with pytest.raises(ValueError, match="duplicate"):
+        SparseInfoThSelector(n_features=2, n_to_select=1).fit(dup, labels)
 
 
 def test_mim_reports_zero_iterations(spark):

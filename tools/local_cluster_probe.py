@@ -69,7 +69,7 @@ def main(cfg_path: str) -> None:
 
     from pyspark.sql import functions as F
 
-    from flink_infotheoretic_feature_selection_spark.operators import histogram
+    from flink_infotheoretic_feature_selection_spark.operators import packed
     from flink_infotheoretic_feature_selection_spark.operators.dedup import minhash_lsh_pairs
     from flink_infotheoretic_feature_selection_spark.selector import (
         InfoThSelector,
@@ -109,7 +109,7 @@ def main(cfg_path: str) -> None:
     out["n_executors"] = n_exec
 
     # -- distributed-merge regime across real executor boundaries -------
-    histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 0
+    packed.BLOB_DRIVER_MERGE_MAX_BYTES = 0
     try:
         m = InfoThSelector(
             n_to_select=4, criterion="mrmr", feature_cols=feats,
@@ -117,7 +117,7 @@ def main(cfg_path: str) -> None:
         ).fit(bare)
         out["distmerge_selection"] = q5_path(m)
     finally:
-        histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
+        packed.BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
 
     # -- wide fit (column-count fast path + direct pack) ----------------
     wide = cfg.get("wide_matrix")

@@ -6,9 +6,9 @@ reference's own default workload is 631 attributes x ~8k rows
 loop's per-iteration cost is linear in the REMAINING features and the
 blob volume grows with features x dims^2.  This script builds that
 shape (plus the README toy: 100 features x 100k rows), runs mRMR k=10,
-and records which hist3d_mi_cmi merge route engages (driver blob merge
-vs the distributed applyInPandas merge — the decision formula from
-``histogram.py::BLOB_DRIVER_MERGE_MAX_BYTES``).
+and records which merge route the loop pass engages (driver blob merge
+vs the distributed combineByKey merge — the decision formula of
+``packed.py::BLOB_DRIVER_MERGE_MAX_BYTES``, at speculation width 0).
 
 Deterministic synthetic data (seeded numpy): feature j has dim
 ``2 + j % 7``; a quarter of the features carry label signal (value
@@ -70,7 +70,7 @@ def build_matrix(out: str, n_rows: int, n_feats: int, seed: int) -> str:
 
 
 def run_case(spark, path: str, n_feats: int, n_rows: int, k: int) -> dict:
-    from flink_infotheoretic_feature_selection_spark.operators.histogram import (
+    from flink_infotheoretic_feature_selection_spark.operators.packed import (
         BLOB_DRIVER_MERGE_MAX_BYTES,
     )
     from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector

@@ -62,21 +62,20 @@ def main() -> int:
         jobs.append(("media", s, lambda d, s=s: corpus.test_media_gates_on_ascii_corpus_with_nulls(spark, d, s)))
     def _matrix_distmerge(d, s):
         # r9 (verdict ask #7): force the DISTRIBUTED merge regime —
-        # combineByKey int64 partials on the dense packed substrate and
-        # PackedSparse's pad-to-max merge — under the randomized
-        # cross-engine sweep.  The default lanes above exercise the
-        # driver-merge regime (random shapes sit far under 32 MB), so
-        # without this lane the distributed branch only ever ran in
-        # test_packed's fixed cases.  Module attr restored in finally:
-        # packed.py re-imports it from histogram at call time.
-        from flink_infotheoretic_feature_selection_spark.operators import histogram
+        # combineByKey int64 partials on the packed substrate — under the
+        # randomized cross-engine sweep.  The default lanes above
+        # exercise the driver-merge regime (random shapes sit far under
+        # 32 MB), so without this lane the distributed branch only ever
+        # ran in test_packed's fixed cases.  Module attr restored in
+        # finally: packed.py reads it at call time.
+        from flink_infotheoretic_feature_selection_spark.operators import packed
 
-        prev = histogram.BLOB_DRIVER_MERGE_MAX_BYTES
-        histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 0
+        prev = packed.BLOB_DRIVER_MERGE_MAX_BYTES
+        packed.BLOB_DRIVER_MERGE_MAX_BYTES = 0
         try:
             matrix.test_core_gates_cross_engine_on_random_matrix(spark, d, s, 120)
         finally:
-            histogram.BLOB_DRIVER_MERGE_MAX_BYTES = prev
+            packed.BLOB_DRIVER_MERGE_MAX_BYTES = prev
 
     for s in thin:
         # r12: writer->reader closure legs (KEEL write-back + JSONL export)
