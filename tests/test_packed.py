@@ -77,6 +77,16 @@ def test_packed_pass_bit_equal_codegen_reference(matrix, packed, method, regime,
             want[s] = {c: mi_and_cmi(h3[c], n, emit_f32=True) for c in remaining}
         args = (remaining, conds, "label", dims, n)
 
+    shuffles = _force_regime(monkeypatch, regime == "shuffled")
+    got = getattr(packed, method)(*args, emit_f32=True)
+    assert len(shuffles) == (regime == "shuffled")
+    assert got == want  # exact float equality, not approx
+
+
+def _force_regime(monkeypatch, shuffled: bool) -> list:
+    """Force the merge helper's regime (a zero budget forces the shuffled
+    combineByKey merge) and count the ``combineByKey`` calls, so a test
+    can assert which regime actually ran."""
     shuffles = []
     combine = RDD.combineByKey
 
@@ -85,11 +95,45 @@ def test_packed_pass_bit_equal_codegen_reference(matrix, packed, method, regime,
         return combine(self, *a, **k)
 
     monkeypatch.setattr(RDD, "combineByKey", counting_combine)
-    if regime == "shuffled":
+    if shuffled:
         monkeypatch.setattr(packed_mod, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-    got = getattr(packed, method)(*args, emit_f32=True)
-    assert len(shuffles) == (regime == "shuffled")
-    assert got == want  # exact float equality, not approx
+    return shuffles
+
+
+@pytest.mark.parametrize("forced_regime", ["driver", "distributed"])
+def test_hist3d_mi_cmi_bit_equal_both_regimes(matrix, packed, forced_regime, monkeypatch):
+    """A one-cond loop pass returns exactly the codegen hist3d +
+    collect_hist3d + mi_and_cmi floats in both merge regimes."""
+    feats = [c for c in matrix.columns if c != "label"]
+    dims, n = _dims_n(matrix)
+    y_dim = dims["label"]
+    best, remaining = feats[3], [c for c in feats if c != feats[3]]
+    h3 = collect_hist3d(
+        hist3d(matrix, remaining, best, "label", dims, dims[best], y_dim),
+        remaining, dims, dims[best], y_dim,
+    )
+    want = {c: mi_and_cmi(h3[c], n, emit_f32=True) for c in remaining}
+    shuffles = _force_regime(monkeypatch, forced_regime == "distributed")
+    got = packed.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n, emit_f32=True)
+    assert len(shuffles) == (forced_regime == "distributed")
+    assert got == {best: want}  # exact float equality in BOTH regimes
+
+
+@pytest.mark.parametrize("forced_regime", ["driver", "distributed"])
+def test_hist3d_mi_cmi_multi_bit_equal_single(matrix, packed, forced_regime, monkeypatch):
+    """r13: the speculative batch pass returns, for every conditioning
+    column, exactly the pairs a one-cond pass returns — in BOTH merge
+    regimes."""
+    feats = [c for c in matrix.columns if c != "label"]
+    dims, n = _dims_n(matrix)
+    conds = [feats[3], feats[0], feats[5]]
+    _force_regime(monkeypatch, forced_regime == "distributed")
+    remaining = [c for c in feats if c != feats[3]]
+    got = packed.hist3d_mi_cmi_multi(remaining, conds, "label", dims, n, emit_f32=True)
+    assert sorted(got) == sorted(conds)
+    for s in conds:
+        want = packed.hist3d_mi_cmi_multi(remaining, [s], "label", dims, n, emit_f32=True)
+        assert got[s] == want[s]  # exact float equality
 
 
 def test_dims_and_count_matches_catalyst_route(matrix, packed):
